@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
   * sink, so projections/sorts/joins all run (a bare `.count()` would let
   * Catalyst prune most of the plan) — while sink I/O stays out of the
   * timing. One warmup action absorbs session/codegen init so the first
-  * measured query isn't charged for it.
+  * measured query isn't charged for it. A query (or the z-order write)
+  * that throws on any rep records no time: it is left out of the maps
+  * and the total, listed under "failed", and the run exits 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -22,7 +24,19 @@ object Bench {
     // warmup: session + codegen + parquet footer reads
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    def attempt[A](what: String)(body: => A): Option[A] =
+      try Some(body)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $what: $e"); None
+      }
+    def timed(body: => Unit): Double = {
+      spark.catalog.clearCache()
+      System.gc()
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }
+    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // min-of-N: the host shows tens-of-percent drift between
       // identical runs (shared-tenancy CPU), and min-of-N is the
       // standard estimator for the machine-limited cost. Two runs
@@ -34,48 +48,47 @@ object Bench {
       // third rep bounds added wall time to the spiked minority. Each
       // run is isolated from leftovers (broadcast blocks, shuffle
       // buffers): drop what's droppable and GC outside the timing.
-      def one(): Double = {
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        (System.nanoTime() - t0) / 1e9
+      def one(): Double =
+        timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      name -> attempt(name) {
+        val t1 = one(); val t2 = one()
+        val times =
+          if (math.abs(t1 - t2) > 0.25 * math.min(t1, t2)) Seq(t1, t2, one())
+          else Seq(t1, t2)
+        // keep rep1 alongside the min (r14 verdict item 5): session
+        // artifacts (graph edges, pinned censuses) memoize per JVM, so
+        // for the first query that touches one, rep1 carries the build
+        // cost the min-of-N estimator hides — bench_out.json reports
+        // both so the ingest/query split is visible per query.
+        (times.min, t1)
       }
-      val t1 = one(); val t2 = one()
-      val times =
-        if (math.abs(t1 - t2) > 0.25 * math.min(t1, t2)) Seq(t1, t2, one())
-        else Seq(t1, t2)
-      // keep rep1 alongside the min (r14 verdict item 5): session
-      // artifacts (graph edges, pinned censuses) memoize per JVM, so
-      // for the first query that touches one, rep1 carries the build
-      // cost the min-of-N estimator hides — bench_out.json reports
-      // both so the ingest/query split is visible per query.
-      (name, times.min, t1)
     }
+    val results = outcomes.collect { case (k, Some((v, r1))) => (k, v, r1) }
     // write-path metric: the noop sink above times compute only, but at
     // 100 TB the sink is half the job — time the one real write path in
     // the surface (z-order layout → range-partition → sorted parquet)
     val writeDir = sys.env.getOrElse("SPARK_GRAFT_WRITE_DIR",
       "/tmp/graft_bench_write")
-    val writeSec = (1 to 2).map { _ =>
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      try graft.ops.Relational.zorderRows(spark, sfDir)
+    val writeSec = attempt("write")((1 to 2).map { _ =>
+      timed(graft.ops.Relational.zorderRows(spark, sfDir)
         .repartitionByRange(cpus.toInt, org.apache.spark.sql.functions.col("z"))
         .sortWithinPartitions("z")
-        .write.mode("overwrite").parquet(writeDir)
-      catch { case e: Throwable => System.err.println(s"[bench] write: $e") }
-      (System.nanoTime() - t0) / 1e9
-    }.min
+        .write.mode("overwrite").parquet(writeDir))
+    }.min)
+    val failed = outcomes.collect { case (k, None) => k } ++
+      (if (writeSec.isEmpty) Seq("write") else Nil)
     // 2-decimal times: centisecond resolution is below host noise
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + f2(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    // "write" only when it succeeded; "failed" always, empty on a clean run
+    val failedJson =
+      failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
+    val tail = writeSec.map(w => s""","write":${f2(w)}""").getOrElse("") +
+      failedJson + s""","sf":"$sfDir"}"""
     val json =
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs,"write":${f2(writeSec)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs""" + tail
     // also write the full JSON to a file: log-tail capture truncated the
     // round-2 per-query map, degrading the judge's evidence
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -101,7 +114,8 @@ object Bench {
     // bench_out.json (written above, committed per round) named as the
     // full map of record. Greedy fill from the slowest down — those are
     // the entries the perf grading actually reads.
-    val budget = 1200 // chars for the inline "queries" map body
+    // chars for the inline "queries" map body; a failed list eats into it
+    val budget = 1200 - failedJson.length
     val bySlow = results.map { case (k, v, _) => (k, v) }.sortBy(-_._2)
     val inline = new StringBuilder
     var kept = 0
@@ -116,7 +130,7 @@ object Bench {
       fits
     }
     val shortJson =
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec","n_queries":${results.size},"queries":{${inline.result()}},"queries_note":"slowest $kept of ${results.size}; full map in bench_out.json","write":${f2(writeSec)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f2(total)},"unit":"sec","n_queries":${results.size},"queries":{${inline.result()}},"queries_note":"slowest $kept of ${results.size}; full map in bench_out.json"""" + tail
     // stop BEFORE the metric lines: Spark's console appender shares
     // stdout, so a late executor/stop WARN after the println would
     // un-tail the JSON the driver greps ("parsed": null in r2/r3)
@@ -127,5 +141,6 @@ object Bench {
     // to stderr, so whichever stream the driver tails last sees it bare
     System.err.println(shortJson)
     System.out.flush(); System.err.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,9 +1,12 @@
 package graft
 
+import java.io.{IOException, UncheckedIOException}
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** The ONE session-config block every bench instrument shares, so the
-  * battery and its probe tools always time the same plans (r14 lesson:
+  * battery, ScaleCheck and perfbench always time the same plans (r14 lesson:
   * five instruments each hand-copied the threshold).
   *
   * Every setting is SIZE-based, never machine-based — the same config
@@ -16,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *     exchange fan out with the CORE COUNT, so per-task fixed
   *     overhead grew with cores: the r14 driver measured the full
   *     battery 27% faster at local[8] than local[32] (298 vs 411 s),
-  *     and this session's JobTrace showed 32-way stages of a ~500 k-row
+  *     and a per-stage task trace showed 32-way stages of a ~500 k-row
   *     query burning 20-40 s of summed task time against ≤1 s for the
   *     same stages 8-wide. Now: partitions = ceil(inputBytes / 2 MB)
   *     (sizing rationale + bracketing measurements on
@@ -24,8 +27,7 @@ import org.apache.spark.sql.SparkSession
   *     (17.5 MB) → 9; 100 TB → the 2^20 cap, which a real deployment
   *     would override per pipeline. The SAME value at every core
   *     count, so the driver's low-core scaling run compares cores,
-  *     not partition layouts. Override:
-  *     `SPARK_GRAFT_SHUFFLE_PARTITIONS`.
+  *     not partition layouts.
   *   - '''`shuffle.sort.bypassMergeThreshold = 0`''' (r15): with ≤200
   *     reduce partitions the default writer opens R files + R
   *     compressor streams per MAP task (the bypass-merge path), so
@@ -33,7 +35,7 @@ import org.apache.spark.sql.SparkSession
   *     Forcing 0 routes every exchange through the serialized
   *     (tungsten) sort writer — ONE file per map task — which is the
   *     path every R>200 production shuffle takes anyway; local plans
-  *     now exercise the production writer. Measured (AbSpike min-of-3,
+  *     now exercise the production writer. Measured (A/B min-of-3,
   *     graph family): −20-35% per query.
   *   - '''64 MB static `autoBroadcastJoinThreshold`''' (r14, measured
   *     545/629 faster): Spark's 10 MB default predates 100+ GiB
@@ -63,35 +65,34 @@ object BenchConf {
     * working-set partition per ~2 MB of source parquet: ~10× parquet→
     * row decode expansion at this schema mix, times the ~3× row-
     * multiplying intermediates (explodes, pair joins, unions) of the
-    * analytic surface. Bracketed at sf0.1/local[32] (ExpBench,
-    * interleaved min-of-2 over a 23-query heavy+cheap panel): 3
+    * analytic surface. Bracketed at sf0.1/local[32] (interleaved
+    * min-of-2 over a 23-query heavy+cheap panel): 3
     * partitions regressed the quantile/sketch cluster 2-3× (too
     * little reduce-side parallelism for data-scale compute), 8 → 16 →
     * 32 within ±6% of each other once the tungsten writer and
     * advisory coalescing are on — so the formula targets the flat
-    * region's low end. Unreadable dirs fall back to 1 advisory
-    * partition (AQE skew split still breaks up anything that
-    * materializes big).
+    * region's low end. A missing or unreadable dir throws with its
+    * path: sizing it as 0 bytes would silently run every exchange
+    * single-partition.
     */
   def sizeDerivedPartitions(dir: String): Int = {
     val bytes =
       try {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
+        val s = Files.walk(Paths.get(dir))
+        try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
         finally s.close()
-      } catch { case _: Exception => 0L }
+      } catch {
+        case e @ (_: IOException | _: UncheckedIOException) =>
+          throw new IllegalArgumentException(
+            s"cannot size data dir $dir: $e", e)
+      }
     val target = 2L << 20
     math.max(1L, math.min((bytes + target - 1) / target, 1L << 20)).toInt
   }
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    apply(b, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-
-  def apply(b: SparkSession.Builder, dir: String): SparkSession.Builder = {
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(_.toInt).getOrElse(sizeDerivedPartitions(dir))
-    b.config("spark.sql.shuffle.partitions", parts.toString)
+  def apply(b: SparkSession.Builder, dir: String): SparkSession.Builder =
+    b.config("spark.sql.shuffle.partitions",
+        sizeDerivedPartitions(dir).toString)
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
@@ -101,7 +102,7 @@ object BenchConf {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         "false")
       // NOT adopted: 16 MB advisoryPartitionSizeInBytes measured −8%
-      // on a 20-query ExpBench panel (quantile cluster −25%) but both
+      // on a 20-query A/B panel (quantile cluster −25%) but both
       // full-battery validation draws landed in a hot co-tenant window
       // (uniform ~1.3× geomean incl. untouched queries), so the
       // battery-level claim could not be proven — the r14 lesson is
@@ -110,5 +111,4 @@ object BenchConf {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         (64L * 1024 * 1024).toString)
-  }
 }

@@ -320,9 +320,11 @@ object ScaleCheck {
     // measured on the same plans the battery times. Note the ×M
     // dirs GROW past 64 MB with depth, so a side that broadcasts at
     // ×1 falls back to shuffle at ×16/×32 — which is exactly the
-    // scale behavior the deep rows exist to demonstrate.
+    // scale behavior the deep rows exist to demonstrate. The shuffle
+    // partition count is re-derived from each ×M dir before it is
+    // timed, as the battery would derive it at that data size.
     val spark = BenchConf(SparkSession.builder()
-      .master(s"local[$cpus]"))
+      .master(s"local[$cpus]"), base)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -333,14 +335,20 @@ object ScaleCheck {
 
     mults.foreach { m =>
       val dir = s"$work/m$m"
-      val times = picks.map { name =>
+      spark.conf.set("spark.sql.shuffle.partitions",
+        BenchConf.sizeDerivedPartitions(dir).toString)
+      // a query that throws records no time: it is left out of the line
+      val times = picks.flatMap { name =>
         spark.catalog.clearCache()
         System.gc()
         val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[scale] $name@m$m: $e") }
-        name -> (System.nanoTime() - t0) / 1e9
+        try {
+          SparkEntry.queries(name)(spark, dir)
+            .write.format("noop").mode("overwrite").save()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[scale] $name@m$m: $e"); None
+        }
       }
       val qs = times.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")

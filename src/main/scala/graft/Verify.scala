@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * throws writes no result; the rest are still written, then the failed
+  * names are printed and the run exits 1 (compare.py cannot see a
+  * missing no-oracle result). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -19,15 +22,18 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => picks.isEmpty || picks(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,5 +50,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

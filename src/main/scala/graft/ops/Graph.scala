@@ -1035,8 +1035,8 @@ object Graph {
         // max broadcast build, the final union) — lazy cache leaves let
         // those consumers materialize the SAME generation concurrently
         // (driver r14: q_hits 13.82 s at 32 cores vs 2.14 s at 8, the
-        // worst inversion in the battery; JobTrace r15 measured ~200 s
-        // of duplicated task CPU per rep). One eager job per
+        // worst inversion in the battery; a per-stage trace in r15
+        // measured ~200 s of duplicated task CPU per rep). One eager job per
         // half-round is the cheaper trade.
         var hubs = cs.select(col("c")).distinct()
           .select(col("c").as("node"), lit(Scale).as("h"))

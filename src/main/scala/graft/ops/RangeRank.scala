@@ -319,14 +319,6 @@ object RangeRank {
     // Σ(v·weight). Byte-identical to feeding the raw rows (selection
     // is by cumulative count either way), but the passes cost
     // O(|census|): the shared-census artifact consumers' fast path.
-    // A/B knobs (same-binary paired timing; see AbRangeRank):
-    //   -Dgraft.rr.refine=N   override refineCellRows (MaxValue ⇒ the
-    //                         skew probe action is skipped entirely)
-    //   -Dgraft.rr.c1=0       disable the single-partition collapse of
-    //                         the tiny census frames (default on)
-    val refineEff = sys.props.get("graft.rr.refine").map(_.toLong)
-      .getOrElse(refineCellRows)
-    val c1 = !sys.props.get("graft.rr.c1").contains("0")
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // prefix-sum plumbing is gated on request so sum-free consumers'
     // plans carry zero extra aggregation columns
@@ -350,12 +342,11 @@ object RangeRank {
     // so every downstream reference — broadcast builds, the skew probe
     // — is a 1-task job instead of a shuffle.partitions-task sweep.
     // At ~25 census rows the single final task is trivially cheap.
-    val stats0 = picks.zipWithIndex.foldLeft(
+    val stats = picks.zipWithIndex.foldLeft(
       df.groupBy(g: _*).agg(min(v).as("__mn"), max(v).as("__mx"),
         rowCnt.cast("long").as(nName))) {
       case (d, (p, i)) => d.withColumn(kCol(i), p.k(col(nName)).cast("long"))
-    }
-    val stats = (if (c1) stats0.coalesce(1) else stats0).localCheckpoint(true)
+    }.coalesce(1).localCheckpoint(true)
     // bucket pass: 2^16 buckets over each group's [mn, mx]; the bucket
     // boundaries are FP but purely internal — every returned value is
     // an exact member of the input column
@@ -386,7 +377,7 @@ object RangeRank {
     // basis): lo_b = mn + b·W, width W = (mx−mn)/2¹⁶ — computable
     // without another input pass
     val w1 = (col("__mx").cast("double") - col("__mn").cast("double")) / 65536.0
-    val brackets1a = hist
+    val brackets1 = hist
       .withColumn("__off", coalesce(sum(col("__c")).over(wB), lit(0L)))
       .withColumn("__soff",
         if (needSums)
@@ -397,21 +388,12 @@ object RangeRank {
       .select((g :+ col("__b")) ++ offCols ++ Seq(col("__c").as("__bc"),
         (col("__mn").cast("double") + col("__b").cast("double") * w1)
           .as("__lo"), w1.as("__w")): _*)
-    val brackets1 =
-      (if (c1) brackets1a.coalesce(1) else brackets1a).localCheckpoint(true)
+      .coalesce(1).localCheckpoint(true)
     // skew probe on the materialized ≤|picks|·|groups|-row bracket
-    // frame. refineEff == MaxValue means the level-2 path can never
-    // trigger, so the probe ACTION (one extra Spark job per consumer
-    // call) is skipped outright. With c1 the probe is a 1-task collect
-    // of the single checkpointed partition, not an agg pipeline.
-    val maxCell =
-      if (refineEff == Long.MaxValue) 0L
-      else if (c1)
-        brackets1.select(col("__bc")).collect()
-          .foldLeft(0L)((m, r) => math.max(m, r.getLong(0)))
-      else brackets1.agg(coalesce(max(col("__bc")), lit(0L)))
-        .first().getLong(0)
-    val (cellRows, brackets, cellKey) = if (maxCell <= refineEff) {
+    // frame: a 1-task collect of the single checkpointed partition
+    val maxCell = brackets1.select(col("__bc")).collect()
+      .foldLeft(0L)((m, r) => math.max(m, r.getLong(0)))
+    val (cellRows, brackets, cellKey) = if (maxCell <= refineCellRows) {
       (bucketed, brackets1.drop("__bc", "__lo", "__w"), Seq("__b"))
     } else {
       // level 2: re-bucket the hit cells' rows over each cell's analytic
@@ -433,7 +415,7 @@ object RangeRank {
         .rowsBetween(Window.unboundedPreceding, -1)
       val parentOff = Seq(col("__off").as("__o1")) ++
         (if (needSums) Seq(col("__soff").as("__so1")) else Nil)
-      val brackets2a = hist2
+      val brackets2 = hist2
         .join(broadcast(brackets1.select((g :+ col("__b")) ++ parentOff: _*)),
           groupCols :+ "__b")
         .withColumn("__off", col("__o1")
@@ -445,8 +427,7 @@ object RangeRank {
         .join(broadcast(stats.select((g ++ kCol.map(col)): _*)), groupCols)
         .filter(hit)
         .select((g :+ col("__b") :+ col("__b2")) ++ offCols: _*)
-      val brackets2 =
-        (if (c1) brackets2a.coalesce(1) else brackets2a).localCheckpoint(true)
+        .coalesce(1).localCheckpoint(true)
       (sub, brackets2, Seq("__b", "__b2"))
     }
     val brkCols = (g ++ cellKey.map(col)) ++ offCols
