@@ -77,8 +77,8 @@ object Tables {
           .getOrElse(1)
       // one output file per ~384 KB of source (snappy parquet decodes to
       // several× its size — this lands sf0.1 lineitem at ~28-way), capped
-      // at the local core count; skip when the source is already at
-      // least that parallel
+      // at 32 files whatever the core count; skip when the source is
+      // already at least that parallel
       val n = math.max(1L, math.min(32L, bytes / 393216L)).toInt
       if (n <= nFiles) raw
       else {

@@ -109,12 +109,11 @@ object MapReduceJob {
       // RangePartitioner places ordering-equal keys in one partition
       // (partition choice is a function of the ordering alone), so the
       // per-partition sorted runs contain every member of each group.
+      // Its sampling job doubles as the emptiness check: a sketch that
+      // counts 0 items yields no bounds, i.e. a single partition.
       val parts = math.min(numPartitions, math.max(1, mapped.partitions.length))
-      val partitioner =
-        if (mapped.isEmpty()) new HashPartitioner(1)
-        else new RangePartitioner(parts, mapped)
       mapped
-        .repartitionAndSortWithinPartitions(partitioner)
+        .repartitionAndSortWithinPartitions(new RangePartitioner(parts, mapped))
         .mapPartitions { it =>
           // equal-key run detection under derived equality
           // !(a<b) && !(b<a) — `JobContext.cpp:102-104`

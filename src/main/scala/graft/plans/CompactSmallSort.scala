@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, FrameLessOffsetWindowFunction, NthValue, RankLike, RowNumberLike, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, BitAggregate, CentralMomentAgg, Count, Covariance, First, Last, Max, MaxMinBy, Min, PearsonCorrelation, Product => ProductAgg, Sum}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CoalesceExec, ExpandExec, FilterExec, ProjectExec, SortExec, SparkPlan, UnionExec}
@@ -70,15 +72,9 @@ case class CompactSmallSort(session: SparkSession) extends Rule[SparkPlan] {
     case s: SortExec => knownSize(s.child)
     case c: CoalesceExec => knownSize(c.child)
     case w: WindowExec
-        // collection-building window aggregates (collect_list/
-        // collect_set) over unbounded frames can grow output by
-        // O(rows)× — a stage measuring under the threshold could then
-        // compact a vastly larger sort into one task (r14 ADVICE).
-        // Plain analytic/arithmetic windows are row-for-row.
-        if !w.windowExpression.exists(_.exists {
-          case _: org.apache.spark.sql.catalyst.expressions.aggregate.Collect[_] => true
-          case _ => false
-        }) => knownSize(w.child)
+        if w.windowExpression.flatMap(_.collect {
+          case we: WindowExpression => we.windowFunction
+        }).forall(rowSized) => knownSize(w.child)
     case e: ExpandExec =>
       // rollup/cube: one output row per projection per input row
       knownSize(e.child).map(_ * math.max(1, e.projections.size))
@@ -93,6 +89,27 @@ case class CompactSmallSort(session: SparkSession) extends Rule[SparkPlan] {
     case j: BroadcastNestedLoopJoinExec =>
       joinThrough(j.left, j.right)
     case _ => None
+  }
+
+  /** Window functions that add one fixed-size value (or a copy of one
+    * input value) per input row: ranking, offset, and arithmetic or
+    * value-picking aggregates. Anything else — collect_list, listagg,
+    * sketches, histograms, percentile arrays — can grow each row by
+    * O(frame) over an unbounded frame, so a stage measuring under the
+    * threshold could compact a vastly larger sort into one task; the
+    * rule then declines (a whitelist, so a new aggregate is excluded
+    * until it is listed).
+    */
+  private def rowSized(f: Expression): Boolean = f match {
+    case _: RowNumberLike | _: RankLike | _: FrameLessOffsetWindowFunction |
+        _: NthValue => true
+    case a: AggregateExpression => a.aggregateFunction match {
+      case _: Sum | _: Count | _: Average | _: Min | _: Max | _: First |
+          _: Last | _: MaxMinBy | _: ProductAgg | _: BitAggregate |
+          _: CentralMomentAgg | _: Covariance | _: PearsonCorrelation => true
+      case _ => false
+    }
+    case _ => false
   }
 
   private def joinThrough(l: SparkPlan, r: SparkPlan): Option[Long] = {

@@ -1325,6 +1325,22 @@ class PlanGuardSpec extends SparkSpec {
         plan.linesIterator.take(40).mkString("\n"))
   }
 
+  /** Rows and final executed plan of `df`, after running it. */
+  private def executedFinal(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val rows = df.collect().toSeq // collect() executes df's own QE
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan match {
+        // QueryStageExec is a LEAF — collect() would see nothing
+        // under a Spark 4 ResultQueryStage root without unwrapping
+        case q: QueryStageExec => q.plan
+        case p => p
+      }
+      case p => p
+    }
+    (rows, p)
+  }
+
   test("CompactSmallSort fires on a small final sort and declines over threshold") {
     // r15 (r14 ADVICE): the rule fired only at runtime, so no suite
     // asserted it — a silent no-op would have passed everything. Fire
@@ -1334,20 +1350,6 @@ class PlanGuardSpec extends SparkSpec {
     // sampled range exchange (the distributed sort a >threshold input
     // needs). Results must be identical either way.
     import org.apache.spark.sql.execution.{CoalesceExec, SortExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def executedFinal(df: org.apache.spark.sql.DataFrame) = {
-      val rows = df.collect().toSeq // collect() executes df's own QE
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan match {
-          // QueryStageExec is a LEAF — collect() would see nothing
-          // under a Spark 4 ResultQueryStage root without unwrapping
-          case q: QueryStageExec => q.plan
-          case p => p
-        }
-        case p => p
-      }
-      (rows, p)
-    }
     def sorted() = spark.range(2000)
       .selectExpr("id % 97 as k", "id as v")
       .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("s"))
@@ -1378,5 +1380,30 @@ class PlanGuardSpec extends SparkSpec {
       case Some(v) => spark.conf.set("spark.graft.compactSortBytes", v)
       case None => spark.conf.unset("spark.graft.compactSortBytes")
     }
+  }
+
+  test("CompactSmallSort sees through row-sized windows only") {
+    // The rule trusts a window's input size only when every window
+    // function adds one fixed-size value per row. An aggregate that
+    // builds each row's value from the whole frame (string_agg,
+    // histogram_numeric) can grow the rows past what the stage below
+    // measured, so the rule must decline and keep the range exchange.
+    def sortedOver(fns: String*) = spark.range(2000)
+      .selectExpr("id % 97 as k", "id as v")
+      .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("s"))
+      .selectExpr("k" +: fns: _*)
+      .orderBy("k")
+    def ranged(fns: String*) =
+      executedFinal(sortedOver(fns: _*))._2.toString.toLowerCase
+        .contains("rangepartitioning")
+    val w = "over (partition by k % 7 order by k)"
+    val whole = "over (partition by k % 7)"
+    assert(!ranged(s"sum(s) $whole", s"row_number() $w", s"lag(s) $w",
+      s"avg(s) $w", s"max(s) $whole"),
+      "row-sized windows no longer compact the final sort")
+    assert(ranged(s"string_agg(cast(s as string), ',') $whole"),
+      "string_agg window compacted a sort of unknown size")
+    assert(ranged(s"histogram_numeric(s, 50) $whole"),
+      "histogram_numeric window compacted a sort of unknown size")
   }
 }
